@@ -161,8 +161,8 @@ def main():
                 sys.stderr.write("".join(f.readlines()[-40:]))
             die("run timed out" if code is None else f"run failed (exit {code})", 4)
         with open(err_path) as f:
-            failed = [l for l in f if l.startswith("failed:") or l.startswith("  ")]
-        sys.stderr.write("".join(failed[:40]))
+            notes = [l for l in f if l.startswith(("failed:", "  ", "host:"))]
+        sys.stderr.write("".join(notes[:40]))
         print("\n".join(lines))
     finally:
         shutil.rmtree(work, ignore_errors=True)

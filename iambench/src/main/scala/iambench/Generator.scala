@@ -3,11 +3,12 @@ package iambench
 import java.util.SplittableRandom
 import scala.collection.mutable.ArrayBuffer
 
-/** Seeded generator of a synthetic organisation. The sizes are fixed; the
-  * seed draws the structure — who belongs to which group, the group
-  * nesting depth, the hub group's share of users, the external share,
-  * where the cycles and empty groups fall — so every seed gives an
-  * organisation of the same size but a different shape.
+/** Seeded generator of a synthetic organisation. The sizes and the group
+  * nesting depth (3) are fixed; the seed draws the structure — who belongs
+  * to which group, how many groups sit at each nesting level, the hub
+  * group's share of users, the external share, where the cycles and empty
+  * groups fall — so every seed gives an organisation of the same size but
+  * a different shape.
   */
 object Generator {
 
@@ -17,13 +18,9 @@ object Generator {
       serviceAccounts: Int = 420,
       projects: Int = 150,
       buckets: Int = 300,
-      rolesPerProject: Int = 3,
-      rolesPerBucket: Int = 1,
       permissions: Int = 120,
-      depth: Int = 3,
       cycles: Int = 6,
-      selfLoops: Int = 4,
-      emptyGroupShare: Double = 0.05) {
+      selfLoops: Int = 4) {
     def principals: Int = users + groups + serviceAccounts
   }
 
@@ -42,9 +39,15 @@ object Generator {
   private val BucketRoles = RoleNames.filter(_.startsWith("roles/storage"))
   private val ProjectRoles = RoleNames.filterNot(_.startsWith("roles/storage"))
 
+  /** Group nesting levels. Deeper nesting multiplies the traversals' cost
+    * per level (see README.md), so it is not drawn from the seed. */
+  val Depth = 3
+  private val RolesPerProject = 3
+  private val RolesPerBucket = 1
+  private val EmptyGroupShare = 0.05
+
   def generate(seed: Long, s: Sizes = Sizes()): Org = {
     val rnd = new SplittableRandom(seed)
-    val depth = s.depth
     val hubShare = 0.88 + 0.06 * rnd.nextDouble()
     val externalShare = 0.05 + 0.10 * rnd.nextDouble()
 
@@ -67,13 +70,12 @@ object Generator {
       vertex(Org.User, s"u$i@$dom", Map("isExternal" -> ext.toString))
     }
     // Groups by nesting level: level 0 holds the top-level groups, level
-    // depth-1 the innermost team groups. The seed draws the level profile
-    // (how many groups sit at each level; sizes grow inwards), not the
-    // depth itself: the traversals' round count follows the depth.
-    val weights = (0 until depth).map(l => 1.0 + l * (0.5 + rnd.nextDouble()))
+    // Depth-1 the innermost team groups. The seed draws the level profile:
+    // how many groups sit at each level, with sizes growing inwards.
+    val weights = (0 until Depth).map(l => 1.0 + l * (0.5 + rnd.nextDouble()))
     val perLevel = {
       val raw = weights.map(w => (w / weights.sum * (s.groups - 1)).toInt.max(1))
-      raw.updated(depth - 1, raw.last + (s.groups - 1 - raw.sum))
+      raw.updated(Depth - 1, raw.last + (s.groups - 1 - raw.sum))
     }
     var gi = 0
     val levels = perLevel.map { k =>
@@ -84,7 +86,7 @@ object Generator {
     }
     val hub = vertex(Org.Group, "all-users@corp.example", Map("isExternal" -> "false"))
     val groups = levels.flatten :+ hub
-    val empty = groups.filter(g => g != hub && rnd.nextDouble() < s.emptyGroupShare).toSet
+    val empty = groups.filter(g => g != hub && rnd.nextDouble() < EmptyGroupShare).toSet
     val sas = (0 until s.serviceAccounts).map { i =>
       vertex(Org.ServiceAccount, s"sa$i@p${rnd.nextInt(s.projects)}.iam.example",
         Map("displayName" -> s"service $i"))
@@ -107,23 +109,23 @@ object Generator {
     // team groups, in one group of the level above them.
     val parent = scala.collection.mutable.HashMap.empty[Int, Int]
     val second = scala.collection.mutable.HashMap.empty[Int, Int].withDefaultValue(-1)
-    for (l <- 1 until depth; g <- levels(l)) {
+    for (l <- 1 until Depth; g <- levels(l)) {
       parent(g) = pick(levels(l - 1))
       edge(g, parent(g))
       if (rnd.nextDouble() < 0.1) { second(g) = pick(levels(l - 1)); edge(g, second(g)) }
     }
-    edge(hub, pick(levels(depth - 2)))
+    edge(hub, pick(levels(Depth - 2)))
     // Membership cycles: a group joins one of its own member team groups
     // (a team with a single parent, so the cycle adds no longer path).
     for (_ <- 0 until s.cycles) {
-      val child = pick(levels(depth - 1))
+      val child = pick(levels(Depth - 1))
       if (second(child) < 0) edge(parent(child), child)
     }
     for (_ <- 0 until s.selfLoops) { val g = pick(groups); edge(g, g) }
 
     // Users join one or two team groups (the two innermost levels),
     // and most of them the hub.
-    val teams = (levels(depth - 1) ++ levels(depth - 2)).filterNot(empty)
+    val teams = (levels(Depth - 1) ++ levels(Depth - 2)).filterNot(empty)
     users.foreach { u =>
       for (_ <- 0 until 1 + rnd.nextInt(2)) edge(u, pick(teams))
       if (rnd.nextDouble() < hubShare) edge(u, hub)
@@ -150,17 +152,16 @@ object Generator {
       r
     }
     projects.zipWithIndex.foreach { case (p, i) =>
-      for (_ <- 0 until s.rolesPerProject) bind(p, s"projects/p-$i", pick(ProjectRoles))
+      for (_ <- 0 until RolesPerProject) bind(p, s"projects/p-$i", pick(ProjectRoles))
     }
     buckets.zipWithIndex.foreach { case (b, i) =>
-      for (_ <- 0 until s.rolesPerBucket) bind(b, s"buckets/b-$i", pick(BucketRoles))
+      for (_ <- 0 until RolesPerBucket) bind(b, s"buckets/b-$i", pick(BucketRoles))
     }
     for (_ <- 0 until 3) {
       val j = rnd.nextInt(s.projects)
       edge(hub, bind(projects(j), s"projects/p-$j", "roles/viewer"))
     }
 
-    new Org(label.toArray, key.toArray, props.toArray, src.toArray, dst.toArray,
-      depth, hub, hubShare)
+    new Org(label.toArray, key.toArray, props.toArray, src.toArray, dst.toArray, hub)
   }
 }

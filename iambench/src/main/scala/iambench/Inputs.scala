@@ -113,7 +113,7 @@ final class Inputs(val org: Org, seed: Long) {
       org.reachUntil(batch, org.label(_) == Org.Project).map(org.id(_)))
   }
 
-  lazy val closure: Digest = org.closureDigest
+  lazy val closure: Org.Digest = org.closureDigest
 
   /** Longest shortest path from any vertex: the level bound that makes the
     * SQL recursion below equal the closure on a graph with cycles. */
@@ -163,8 +163,6 @@ object Inputs {
   final case class ConsoleQuery(shape: String, text: String, bindings: Map[String, Long],
                                 expect: Seq[String])
   final case class ReachBatch(text: String, expect: Set[Long])
-  type Digest = Org.Digest
-  val Digest = Org.Digest
 
   def vertexLine(id: Long, label: String, key: String, props: scala.collection.Map[String, String]): String =
     s"$id|$label|$key|${props.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")}"

@@ -24,9 +24,7 @@ final class Org(
     val props: Array[Map[String, String]],
     val src: Array[Int],
     val dst: Array[Int],
-    val depth: Int,
-    val hub: Int,
-    val hubShare: Double) {
+    val hub: Int) {
 
   import Org._
 
