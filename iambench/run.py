@@ -161,7 +161,7 @@ def main():
                 sys.stderr.write("".join(f.readlines()[-40:]))
             die("run timed out" if code is None else f"run failed (exit {code})", 4)
         with open(err_path) as f:
-            notes = [l for l in f if l.startswith(("failed:", "  ", "host:"))]
+            notes = [l for l in f if l.startswith(("failed:", "  ", "host:", "ops:"))]
         sys.stderr.write("".join(notes[:40]))
         print("\n".join(lines))
     finally:

@@ -87,6 +87,8 @@ final class Run(args: Main.Args) {
   private var diskLookupsDone, consoleQueriesDone, resultRows = 0L
   private var rowsOffered, rowsAppended, filesWritten, storeBytes = 0L
   private var stealShare = Double.NaN
+  /** Time of each complete round of the workload's operations. */
+  private val roundS = ArrayBuffer.empty[Double]
   /** Traced runs: vertices and edges each `groovy.load` span parsed. */
   private val parsed = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
 
@@ -135,10 +137,16 @@ final class Run(args: Main.Args) {
     val gcSeconds = (gcMillis() - gc0) / 1e3
     stealShare = (stealTicks() - steal0) / (cpus * 100.0 * trace.last.seconds)
     System.err.println(f"host: cpu_steal=$stealShare%.4f window_s=${trace.last.seconds}%.3f")
+    System.err.println(workload.opMedians.map { case (k, v) => f"$k=$v%.4f" }
+      .mkString(s"ops: rounds=${roundS.size} median_s ", " ", ""))
+    filesWritten = dataFiles(workload.store)
+    storeBytes = dataBytes(workload.store)
     trace.span("check")(workload.check())
 
-    e2e("setup_s", setupSeconds, "s")
     workload.report()
+    e2e("setup_s", setupSeconds, "s")
+    e2e("round_s", median(roundS), "s")
+    e2e("store_bytes_per_input_byte", storeBytes.toDouble / groovyBytes, "ratio")
     e2e("peak_rss_mb", peakRssMb(), "MB")
     if (args.trace) traceReport(gcSeconds)
     spark.stop()
@@ -203,19 +211,22 @@ final class Run(args: Main.Args) {
     def window(deadline: Long): Unit
     def check(): Unit
     def report(): Unit
+    /** The merged store the workload's questions are asked of. */
+    def store: File
+    /** Median time of each kind of timed operation, in seconds. */
+    def opMedians: Seq[(String, Double)]
   }
 
   private def over(deadline: Long) = System.nanoTime() >= deadline
 
-  /** The analyst's session on a fresh extraction: ingest the seven
-    * scripts, merge the re-extraction, take a census, then a closed loop
-    * with one client that alternates Gremlin console queries and fluent
-    * point lookups against the merged at-rest store. */
+  /** The analyst's session, round after round: ingest the seven scripts
+    * of an extraction into a fresh store, merge the re-extraction, load
+    * the merged at-rest store, then a closed loop with one client that
+    * alternates Gremlin console queries and fluent point lookups on it. */
   private final class LookupWorkload(spark: SparkSession, in: Inputs) extends Workload {
-    private val stores = (1 to IngestReps).map(i => sub(s"main-store-$i"))
-    private val store = stores.last
+    private val stores = ArrayBuffer.empty[File]
     private var graph: PropertyGraph = _
-    private val ingestS, mergeS = ArrayBuffer.empty[Double]
+    private val ingestS, mergeS, serveS = ArrayBuffer.empty[Double]
     private val lookups = ArrayBuffer.empty[(Inputs.DiskLookup, Array[Row], Double)]
     private val answers = ArrayBuffer.empty[(Inputs.ConsoleQuery, Array[Row], Double)]
 
@@ -233,46 +244,49 @@ final class Run(args: Main.Args) {
     private def console(g: PropertyGraph, q: Inputs.ConsoleQuery): DataFrame =
       GremlinLite.run(g, q.text, q.bindings, Org.KeyProps)
 
-    def window(deadline: Long): Unit = {
-      // Each extraction goes to a store of its own and the re-extraction
-      // is merged into it; the last store is the one the session goes on
-      // with. Every store is checked by a census after the window.
-      stores.foreach { to =>
-        if (attempt("ingest")(ingest(spark, sub("main-groovy"), to)).isDefined) {
-          ingestS += lastOp
-          attempt("merge")(merge(spark, sub("main-delta"), to)).foreach(_ => mergeS += lastOp)
-        }
-      }
-      attempt("serve")(trace.span("storage.load")(GraphStorage.load(spark, store.toString)))
-        .foreach(graph = _)
-      if (graph == null) return
-      var i = 0
-      while (i < 2 * MinLookups || !over(deadline)) {
-        if (i % 2 == 0) {
-          val q = in.console(i / 2 % in.console.length)
+    /** One round; its time, or None if an operation in it failed. Each
+      * round's extraction goes to a store of its own, checked by a census
+      * after the window; the replay check uses the last round's store. */
+    private def round(): Option[Double] = {
+      val to = sub(s"main-store-${stores.size + 1}")
+      stores += to
+      val built = for {
+        _ <- attempt("ingest")(ingest(spark, sub("main-groovy"), to)).map(_ => ingestS += lastOp)
+        _ <- attempt("merge")(merge(spark, sub("main-delta"), to)).map(_ => mergeS += lastOp)
+        g <- attempt("serve")(trace.span("storage.load")(GraphStorage.load(spark, to.toString)))
+      } yield { serveS += lastOp; graph = g; ingestS.last + mergeS.last + lastOp }
+      built.flatMap { t0 =>
+        var t = t0
+        var ok = true
+        for (_ <- 0 until QueriesPerRound) {
+          val q = in.console(answers.size % in.console.length)
           attempt("console") {
             val df = trace.span("gremlin.run")(console(graph, q))
             trace.span("query.exec")(df.collect())
-          }.foreach(rows => answers += ((q, rows, lastOp)))
-        } else {
-          val d = in.diskLookups(i / 2 % in.diskLookups.length)
-          attempt("disk_lookup")(trace.span("storage.lookup")(graph.lookup(d.label, d.key).collect()))
-            .foreach(rows => lookups += ((d, rows, lastOp)))
+          } match {
+            case Some(rows) => answers += ((q, rows, lastOp)); t += lastOp
+            case None => ok = false
+          }
+          val d = in.diskLookups(lookups.size % in.diskLookups.length)
+          attempt("disk_lookup")(trace.span("storage.lookup")(graph.lookup(d.label, d.key).collect())) match {
+            case Some(rows) => lookups += ((d, rows, lastOp)); t += lastOp
+            case None => ok = false
+          }
         }
-        i += 1
+        if (ok) Some(t) else None
       }
     }
+
+    def window(deadline: Long): Unit = rounds(LookupRounds, deadline)(round())
 
     private def whole = (in.org.n.toLong, in.org.m.toLong)
 
     def check(): Unit = {
-      for (s <- stores.take(ingestS.size); (_, nv, ne) <- attempt("census")(takeCensus(spark, s))) {
+      for (s <- stores if s.exists; (_, nv, ne) <- attempt("census")(takeCensus(spark, s))) {
         expect(Checks.census(s"census after merge into ${s.getName}", (nv, ne), whole))
         rowsOffered = in.deltaVertices + in.deltaEdges
         rowsAppended = nv - in.baseVertices + ne - in.baseEdges
       }
-      filesWritten = dataFiles(store)
-      storeBytes = dataBytes(store)
       lookups.foreach { case (d, rows, _) =>
         expect(Checks.same(s"lookup ${d.label}/${d.key}",
           rows.toSeq.map(vertexLine), d.expect.map(in.vertexLine).toSeq))
@@ -284,23 +298,20 @@ final class Run(args: Main.Args) {
       }
       // A second replay of the same delta must append nothing.
       if (graph != null) attempt("replay") {
-        merge(spark, sub("main-delta"), store)
-        takeCensus(spark, store)
+        merge(spark, sub("main-delta"), stores.last)
+        takeCensus(spark, stores.last)
       }.foreach { case (_, nv, ne) => expect(Checks.census("census after replay", (nv, ne), whole)) }
     }
 
+    def store: File = stores.lastOption.orNull
+
+    def opMedians: Seq[(String, Double)] = Seq("ingest" -> ingestS, "merge" -> mergeS,
+      "serve" -> serveS, "console" -> answers.map(_._3), "disk_lookup" -> lookups.map(_._3))
+      .map { case (k, xs) => k -> median(xs) }
+
     def report(): Unit = {
-      e2e("ingest_s", median(ingestS), "s")
-      e2e("merge_s", median(mergeS), "s")
-      e2e("store_bytes_per_input_byte", storeBytes.toDouble / groovyBytes, "ratio")
-      val disk = lookups.map(_._3 * 1e3)
-      e2e("disk_lookup_p50_ms", percentile(disk, 0.5), "ms")
-      e2e(s"disk_lookup_p${TailPct}_ms", percentile(disk, TailPct / 100.0), "ms")
-      val con = answers.map(_._3 * 1e3)
-      e2e("lookup_p50_ms", percentile(con, 0.5), "ms")
-      e2e(s"lookup_p${TailPct}_ms", percentile(con, TailPct / 100.0), "ms")
-      diskLookupsDone = disk.size
-      consoleQueriesDone = con.size
+      diskLookupsDone = lookups.size
+      consoleQueriesDone = answers.size
     }
   }
 
@@ -313,15 +324,16 @@ final class Run(args: Main.Args) {
     private val reached = ArrayBuffer.empty[Set[Long]]
     private val closures, sqls = ArrayBuffer.empty[Row]
 
+    val store: File = sub("main-store")
+
     /** The store, and a temp view of its edges for the SQL question.
       * Building it is the JVM's first Spark work; the three questions
       * have no warm-up of their own, as the window's median discounts a
-      * slower first repetition. */
+      * slower first round. */
     def setup(): Unit = trace.span("setup.store_build") {
-      val dir = sub("main-store")
-      ingest(spark, sub("main-groovy"), dir)
-      merge(spark, sub("main-delta"), dir)
-      graph = GraphStorage.load(spark, dir.toString)
+      ingest(spark, sub("main-groovy"), store)
+      merge(spark, sub("main-delta"), store)
+      graph = GraphStorage.load(spark, store.toString)
       graph.edges.filter(col("label") === "in").select(col("src"), col("dst"))
         .createOrReplaceTempView(EdgeView)
     }
@@ -340,20 +352,15 @@ final class Run(args: Main.Args) {
     private def sql(): Row =
       trace.span("sql.recursive")(spark.sql(in.reachSql(EdgeView)).head())
 
-    /** [[ReachReps]] repetitions at least; another only if it can end in
-      * the window, so a run's length stays near the window's. */
-    def window(deadline: Long): Unit = {
-      var reps = 0
-      var last = 0L
-      while (reps < ReachReps || !over(deadline - last)) {
-        val t0 = System.nanoTime()
-        attempt("reach_batch")(reach()).foreach { ids => reached += ids; reachS += lastOp }
-        attempt("closure")(closure()).foreach { r => closures += r; closureS += lastOp }
-        attempt("sql_reach")(sql()).foreach { r => sqls += r; sqlS += lastOp }
-        last = System.nanoTime() - t0
-        reps += 1
-      }
+    /** One round: the three questions; its time, or None if one failed. */
+    private def round(): Option[Double] = {
+      val r = attempt("reach_batch")(reach()).map { ids => reached += ids; reachS += lastOp; lastOp }
+      val c = attempt("closure")(closure()).map { row => closures += row; closureS += lastOp; lastOp }
+      val q = attempt("sql_reach")(sql()).map { row => sqls += row; sqlS += lastOp; lastOp }
+      for (a <- r; b <- c; d <- q) yield a + b + d
     }
+
+    def window(deadline: Long): Unit = rounds(ReachRounds, deadline)(round())
 
     def check(): Unit = {
       reached.foreach(ids => expect(Checks.same("reach batch", ids, in.reachBatch.expect)))
@@ -361,11 +368,21 @@ final class Run(args: Main.Args) {
       sqls.foreach(r => expect(Checks.digest("WITH RECURSIVE", r, in.closure)))
     }
 
-    def report(): Unit = {
-      e2e("reach_batch_s", median(reachS), "s")
-      e2e("closure_s", median(closureS), "s")
-      e2e("sql_reach_s", median(sqlS), "s")
+    def opMedians: Seq[(String, Double)] =
+      Seq("reach_batch" -> reachS, "closure" -> closureS, "sql_reach" -> sqlS)
+        .map { case (k, xs) => k -> median(xs) }
+
+    def report(): Unit =
       resultRows = reached.map(_.size.toLong).sum + closures.map(_.getLong(0)).sum
+  }
+
+  /** Rounds until the window has closed and at least `least` rounds ran.
+    * A round's time is the sum of its operations' times. */
+  private def rounds(least: Int, deadline: Long)(round: => Option[Double]): Unit = {
+    var n = 0
+    while (n < least || !over(deadline)) {
+      round.foreach(roundS += _)
+      n += 1
     }
   }
 
@@ -453,15 +470,11 @@ final class Run(args: Main.Args) {
 }
 
 object Run {
-  /** Each kind of lookup runs at least this often per run, so the tail
-    * percentile below has ten samples beyond it. */
-  val MinLookups = 40
-  val TailPct = 75
-  /** Ingest-and-merge repetitions per run; `ingest_s` and `merge_s` are
-    * their medians. */
-  val IngestReps = 3
-  /** Least repetitions of the three reach questions per run. */
-  val ReachReps = 2
+  /** Least rounds per run of each workload; `round_s` is their median. */
+  val LookupRounds = 3
+  val ReachRounds = 2
+  /** Console queries, and as many point lookups, in one `iam_lookup` round. */
+  val QueriesPerRound = 10
   val EdgeView = "iam_edges"
   val WarmupQueries = 3
 
